@@ -42,6 +42,7 @@ from rdf_mapreduce_joins_spark.plans.sparql import (
     _rewrite_notbound,
     parse_sparql,
 )
+from rdf_mapreduce_joins_spark.sources.tables import read_parquet
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -724,8 +725,8 @@ def sparql_quads_indexed(spark, path: str, text: str) -> DataFrame:
     ids, on-disk dictionary."""
     # drop() is a no-op when the column is absent: batch-built stores
     # have no ingest_batch, streamed ones carry it as a partition col.
-    quads = spark.read.parquet(f"{path}/quads").drop("ingest_batch")
-    dictionary = spark.read.parquet(f"{path}/dictionary").drop("ingest_batch")
+    quads = read_parquet(spark, f"{path}/quads").drop("ingest_batch")
+    dictionary = read_parquet(spark, f"{path}/dictionary").drop("ingest_batch")
     return sparql_quads(quads, text, encoded=True, dictionary=dictionary)
 
 
@@ -737,8 +738,8 @@ def sparql_triples_indexed(spark, path: str, text: str) -> DataFrame:
     listing. Queries that need term strings mid-plan automatically use
     the store's string columns instead (same fallback rule as the
     inline path)."""
-    tri = spark.read.parquet(f"{path}/triples").drop("ingest_batch")
-    dictionary = spark.read.parquet(f"{path}/dictionary").drop("ingest_batch")
+    tri = read_parquet(spark, f"{path}/triples").drop("ingest_batch")
+    dictionary = read_parquet(spark, f"{path}/dictionary").drop("ingest_batch")
     return sparql_triples(tri, text, encoded=True, dictionary=dictionary)
 
 

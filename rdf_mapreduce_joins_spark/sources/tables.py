@@ -20,14 +20,34 @@ assuming either. Downstream consumers only ever see:
 * ``ts``     — TimestampType (µs, session-UTC) for window/streaming ops.
 
 All other tables pass through with their parquet schema untouched.
+
+Schema memo: :func:`read_parquet` is the one reader for build-once
+parquet (fixture tables, persisted triples/quads stores). A plain
+``spark.read.parquet`` runs a schema-inference Spark job on every call;
+the memo keeps the ``StructType`` Spark inferred and hands it back via
+``spark.read.schema(...)``, so only the first read of a file runs that
+job. The key is the absolute path plus the confs that change what is
+inferred (:data:`_INFERENCE_CONFS`); the stored value is the file
+identity and the schema. Identity is ``(st_mtime_ns, st_size)`` of a
+file, or the sorted ``(path, mtime_ns, size)`` of every file under a
+directory (a hive-partitioned store). A re-provisioned fixture or a
+rebuilt store has a new identity, is re-inferred and replaces its entry,
+so the memo holds one entry per key. A path ``os.stat`` cannot see (a
+non-local URI, a missing file) goes through plain ``spark.read.parquet``,
+so its errors are unchanged. Each call returns a new DataFrame; paths
+rewritten by the engine itself (CDC state, incremental dedup, sketch and
+sink round trips) keep the plain reader, since their identity changes on
+every write.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from rdf_mapreduce_joins_spark.session import ensure_runtime_confs
 
@@ -76,10 +96,58 @@ def normalize_events(df: DataFrame) -> DataFrame:
     raise TypeError(f"events.ts has unsupported type {ts_type!r}")
 
 
+# Confs that change the StructType Spark infers from parquet footers.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# (abspath, conf values) -> (file identity, inferred schema)
+_SCHEMAS: dict[tuple, tuple[object, StructType]] = {}
+
+
+def _file_identity(path: str):
+    """``(mtime_ns, size)`` of a file, or the sorted per-file triples of
+    everything under a directory; None when ``os.stat`` cannot see it."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_mtime_ns, st.st_size)
+    files = []
+    for root, _, names in os.walk(path):
+        for n in names:
+            f = os.path.join(root, n)
+            try:
+                fst = os.stat(f)
+            except OSError:  # removed mid-walk: the next call re-walks
+                return None
+            files.append((f, fst.st_mtime_ns, fst.st_size))
+    return tuple(sorted(files))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job once
+    the file's schema is known (see the module docstring)."""
+    ident = _file_identity(path)
+    if ident is None:
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == ident:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (ident, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table; normalizes the events timestamp column."""
     ensure_runtime_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_events(df)
     return df

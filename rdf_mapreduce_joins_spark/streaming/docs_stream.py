@@ -37,6 +37,7 @@ from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from rdf_mapreduce_joins_spark.operators.dedup import with_simhash_bands
 from rdf_mapreduce_joins_spark.session import ensure_runtime_confs
+from rdf_mapreduce_joins_spark.sources.tables import read_parquet
 from rdf_mapreduce_joins_spark.streaming import snapshots
 
 _N_BANDS = 4
@@ -46,12 +47,12 @@ def read_docs_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-source stream of documents rows; schema sniffed from the
-    live parquet footers (metadata-only batch read) — same discipline
-    as the events stream source."""
+    live parquet footers (metadata-only batch read, memoized by file
+    identity) — same discipline as the events stream source."""
     ensure_runtime_confs(spark)
     if not (os.path.isdir(path) or path.endswith(".parquet")):
         raise ValueError(f"unsupported stream path: {path}")
-    file_schema = spark.read.parquet(path).schema
+    file_schema = read_parquet(spark, path).schema
     reader = spark.readStream.schema(file_schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

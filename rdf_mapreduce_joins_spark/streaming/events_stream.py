@@ -30,7 +30,7 @@ from pyspark.sql.types import (
 
 from rdf_mapreduce_joins_spark.operators.sketches import hll_portable_cols
 from rdf_mapreduce_joins_spark.session import ensure_runtime_confs
-from rdf_mapreduce_joins_spark.sources.tables import normalize_events
+from rdf_mapreduce_joins_spark.sources.tables import normalize_events, read_parquet
 
 
 def read_events_stream(
@@ -42,9 +42,10 @@ def read_events_stream(
     File streams require an explicit schema; hard-coding one silently
     mis-reads re-provisioned fixtures (an int64-nanos schema applied to
     timestamp[us] files yields wrong epochs, not an error). So the
-    schema is sniffed from the actual parquet footers with a one-off
-    batch read — metadata-only, no row groups touched — and the same
-    dtype-adaptive :func:`normalize_events` runs on the stream.
+    schema is sniffed from the actual parquet footers with a batch
+    read — metadata-only, memoized by file identity
+    (:func:`read_parquet`) — and the same dtype-adaptive
+    :func:`normalize_events` runs on the stream.
 
     ``max_files_per_trigger`` splits a multi-file directory into that
     many files per micro-batch — with availableNow this replays the
@@ -53,7 +54,7 @@ def read_events_stream(
     ensure_runtime_confs(spark)
     if not (os.path.isdir(path) or path.endswith(".parquet")):
         raise ValueError(f"unsupported stream path: {path}")
-    file_schema = spark.read.parquet(path).schema
+    file_schema = read_parquet(spark, path).schema
     reader = spark.readStream.schema(file_schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
