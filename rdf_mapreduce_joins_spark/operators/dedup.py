@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rdf_mapreduce_joins_spark.operators import hashing
+from rdf_mapreduce_joins_spark.operators.loops import converge, released
 from rdf_mapreduce_joins_spark.sources.tables import spread
 
 # Universal-hash domain: h0 ∈ [0, P31); permutation i is
@@ -397,7 +398,10 @@ def connected_components(
     loop carries only the converged/changed COUNT, never row data.
 
     Only nodes that appear in ``pairs`` are labeled (singletons are
-    their own trivial cluster and never entered the graph)."""
+    their own trivial cluster and never entered the graph). Raises
+    RuntimeError if labels still change after ``max_iter`` rounds
+    (operators/loops.py::converge); labels that became final in round
+    ``max_iter`` are returned."""
     # Partitioning is deliberately left to AQE round by round (pinning
     # a fixed fan-out was measured 1.6-3x SLOWER at sf0.1: it either
     # replaces AQE's coalescing with per-round task overhead or, sized
@@ -409,13 +413,8 @@ def connected_components(
     edges = sym.union(
         sym.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct().persist()
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
+
+    def step(labels):
         # One aggregation merges the neighbor-min AND the node's own
         # label (round 11): the self rows ride the same exchange as
         # the neighbor stream instead of a second labels⋈nb_min LEFT
@@ -459,19 +458,17 @@ def connected_components(
             )
             .localCheckpoint(eager=False)
         )
-        changed = new_labels.where("chg").count()
-        labels = new_labels.drop("chg")
-        if changed == 0:
-            break
-    else:
-        edges.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} "
-            "rounds (graph diameter exceeds it) — the labels would be "
-            "non-minimal. Re-run with a larger max_iter."
+        return new_labels.drop("chg"), new_labels.where("chg").count()
+
+    with released(edges):
+        labels = (
+            edges.select(F.col("a").alias("node"))
+            .distinct()
+            .withColumn("component", F.col("node"))
+            .localCheckpoint()
         )
-    edges.unpersist()
-    return labels
+        what = "connected_components has not converged"
+        return converge(step, labels, max_iter, what)
 
 
 # --------------------------------------------------------------------------

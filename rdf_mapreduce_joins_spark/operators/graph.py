@@ -1,31 +1,42 @@
-"""Graph operators over an edge relation: transitive closure,
-degrees, fixed-iteration PageRank, and exact triangle counting.
+"""Graph operators over an edge relation (DataFrame in, DataFrame out):
+
+* one-pass: ``degrees`` (in/out degree) and ``triangle_count`` (exact,
+  id- or degree-oriented behind a wedge-volume probe);
+* fixed-round: ``pagerank``, ``hits`` (hubs & authorities) and
+  ``label_propagation`` (deterministic LPA communities);
+* hop-bounded: ``weighted_sssp`` (Bellman-Ford, stops at ``max_hops``);
+* run to a fixpoint: ``transitive_closure`` (path doubling),
+  ``shortest_hops`` (BFS) and ``kcore`` (iterative peeling), plus
+  ``connected_components`` in operators/dedup.py.
+
+The loops share one kernel, operators/loops.py: ``converge`` decides
+exhaustion for the fixpoint loops (raise only when the probe round after
+``max_iter`` still changes something), and ``released`` unpersists each
+loop's cached frames on every exit path. Every loop checkpoints each
+round, so its plan stays O(1) per round; in the fixpoint and hop-bounded
+loops the checkpoint is lazy and the round's own count materializes it,
+so a round is one Spark job. The driver-side loops carry only row
+COUNTS, never row data.
 
 The reference (SURVEY.md §2.3 [K]) executes fixed multi-hop join chains
 as one MapReduce job per hop; it has no *unbounded*-reachability
 operator. SPARQL property paths (``<p>+``) require one, so the engine
 adds it here: the classic iterative-doubling closure, expressed as
-DataFrame self-joins.
-
-Scale posture: **path doubling** (R₂ₖ = Rₖ ∪ Rₖ∘Rₖ) converges in
+DataFrame self-joins. **Path doubling** (R₂ₖ = Rₖ ∪ Rₖ∘Rₖ) converges in
 ⌈log₂ diameter⌉ rounds instead of the frontier method's ``diameter``
 rounds — at web scale the round count, not per-round work, dominates
-(each round is a full shuffle stage + a distinct). Every round runs one
-equi-join on the hop key and one hash-distinct, both AQE-planned;
-``localCheckpoint`` truncates lineage so the plan stays O(1) per round
-rather than growing exponentially. The driver-side loop carries only
-row COUNTS (convergence test), never row data.
-
-Memory bound: closure size is Σ|reach(v)| — for hierarchy-like graphs
-(depth d trees) that is O(N·d), not O(N²); for dense components the
-caller should collapse them with connected-components first
-(operators/dedup.py) and run closure on the condensation.
+(each round is a full shuffle stage + a distinct). Closure size is
+Σ|reach(v)| — for hierarchy-like graphs (depth d trees) that is O(N·d),
+not O(N²); for dense components the caller should collapse them with
+connected-components first and run closure on the condensation.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from rdf_mapreduce_joins_spark.operators.loops import converge, released
 
 
 def _target_partitions(sess: SparkSession) -> int:
@@ -53,9 +64,11 @@ def transitive_closure(
 
     ``max_iter`` bounds the doubling rounds: paths up to length
     2^max_iter are found, which at 20 covers any graph a join could
-    materialize. Returns columns ``(src, dst)``; input edge rows with
-    NULL endpoints are dropped (NULL never joins anyway — dropping
-    keeps the distinct small)."""
+    materialize; a closure still growing after that raises
+    RuntimeError (operators/loops.py::converge) instead of returning
+    the truncated pair set. Returns columns ``(src, dst)``; input edge
+    rows with NULL endpoints are dropped (NULL never joins anyway —
+    dropping keeps the distinct small)."""
     # LAZY checkpoints + count-as-materializer throughout the loop
     # family (round 12): an eager checkpoint runs one job and the
     # convergence count a second; with eager=False the count IS the
@@ -68,8 +81,9 @@ def transitive_closure(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    n = closure.count()
-    for _ in range(max_iter):
+
+    def step(state):
+        closure, n = state
         hop = (
             closure.alias("a")
             .join(closure.alias("b"), F.col("a.dst") == F.col("b.src"))
@@ -77,11 +91,10 @@ def transitive_closure(
         )
         grown = closure.unionByName(hop).distinct().localCheckpoint(eager=False)
         m = grown.count()
-        closure = grown
-        if m == n:
-            break
-        n = m
-    return closure
+        return (grown, m), m - n
+
+    what = "transitive_closure has not reached its fixpoint"
+    return converge(step, (closure, closure.count()), max_iter, what)[0]
 
 
 def degrees(
@@ -148,31 +161,30 @@ def pagerank(
     # this session: the adjacency was silently recomputed+reshuffled
     # every round). The checkpoint replaces the plan with a fresh-id
     # leaf, so no dedup fires and the adjacency cache always hits.
-    ranks = nodes.withColumn("rank", F.lit(1.0)).localCheckpoint()
-    n = ranks.count()
-    for _ in range(n_iter):
-        # ranks stays localCheckpoint-ed: it is loop-CARRIED, so the
-        # lineage cut is what keeps the plan O(1) per round; its
-        # partitioning loss costs O(|V|) exchanges per round, small
-        # next to the O(|E|) adjacency work the cache saves.
-        # NEGATIVE RESULT (measured round 6, sf0.1 idle, 3 reps):
-        # checkpointing every SECOND round — halving the eager
-        # materializations and letting the odd round's dst-partitioned
-        # aggregation feed the even round's join directly — ran
-        # 16-21 s vs 12.6-13.7 s for per-round checkpoints. The fused
-        # two-round plan spawns more concurrent AQE stages than it
-        # saves in materialization; don't re-try without re-measuring.
-        nxt = _pagerank_iteration(ranks, adj, n, damping)
-        if fixed_point_scale is not None:
-            nxt = nxt.withColumn(
-                "rank",
-                F.round(F.col("rank") * fixed_point_scale)
-                / fixed_point_scale,
-            )
-        ranks = nxt.localCheckpoint()
-    adj.unpersist()
-    e.unpersist()
-    return ranks.drop("is_dangling")
+    with released(adj, e):
+        ranks = nodes.withColumn("rank", F.lit(1.0)).localCheckpoint()
+        n = ranks.count()
+        for _ in range(n_iter):
+            # ranks stays localCheckpoint-ed: it is loop-CARRIED, so the
+            # lineage cut is what keeps the plan O(1) per round; its
+            # partitioning loss costs O(|V|) exchanges per round, small
+            # next to the O(|E|) adjacency work the cache saves.
+            # NEGATIVE RESULT (measured round 6, sf0.1 idle, 3 reps):
+            # checkpointing every SECOND round — halving the eager
+            # materializations and letting the odd round's dst-partitioned
+            # aggregation feed the even round's join directly — ran
+            # 16-21 s vs 12.6-13.7 s for per-round checkpoints. The fused
+            # two-round plan spawns more concurrent AQE stages than it
+            # saves in materialization; don't re-try without re-measuring.
+            nxt = _pagerank_iteration(ranks, adj, n, damping)
+            if fixed_point_scale is not None:
+                nxt = nxt.withColumn(
+                    "rank",
+                    F.round(F.col("rank") * fixed_point_scale)
+                    / fixed_point_scale,
+                )
+            ranks = nxt.localCheckpoint()
+        return ranks.drop("is_dangling")
 
 
 def _pagerank_setup(
@@ -473,23 +485,17 @@ def shortest_hops(
     # (an isolated source must yield [(source, 0)], matching the
     # recursive-CTE oracle shape).
     node_type = adj.schema["a"].dataType
-    frontier = (
-        edges.sparkSession.range(1)
-        .select(
-            F.lit(source).cast(node_type).alias("node"),
-            F.lit(0).alias("dist"),
-        )
-        .localCheckpoint()
-    )
-    visited = frontier
+
     # ONE job per round (round 12): the frontier count doubles as the
-    # lazy checkpoint's materializing action AND the loop-control probe
-    # (replacing the separate limit(1).count() job), and the visited
-    # union is checkpointed lazily — its single consumer (next round's
-    # anti-join, or the caller's action after the break) materializes
-    # it inside its own job. The old shape ran 3 jobs per round
-    # (frontier probe, nxt checkpoint, visited checkpoint).
-    for depth in range(1, max_iter + 1):
+    # lazy checkpoint's materializing action AND the loop-control probe,
+    # and the visited union is checkpointed lazily — its single consumer
+    # (next round's anti-join, or the caller's action after the loop)
+    # materializes it inside its own job. A diameter of exactly
+    # max_iter leaves the last-discovered nodes with nothing left to
+    # explore, so the kernel's probe round finds an empty frontier and
+    # returns (round-5 advice).
+    def step(state):
+        frontier, visited, depth = state
         nxt = (
             frontier.join(adj, frontier["node"] == adj["a"])
             .select(F.col("b").alias("node"))
@@ -498,34 +504,23 @@ def shortest_hops(
             .withColumn("dist", F.lit(depth))
             .localCheckpoint(eager=False)
         )
-        if nxt.count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    else:
-        # Reached only when every round produced a non-empty frontier:
-        # a live frontier after max_iter rounds only means truncation
-        # when those frontier nodes still have UNVISITED neighbors — a
-        # diameter of exactly max_iter leaves the last-discovered nodes
-        # in the frontier with nothing left to explore, and raising
-        # there was a false positive (round-5 advice). One extra
-        # expansion probe decides; raise only on genuine truncation
-        # (round-4 operator review set the fail-loud contract).
-        unexplored = (
-            frontier.join(adj, frontier["node"] == adj["a"])
-            .select(F.col("b").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-        )
-        if unexplored.limit(1).count() != 0:
-            adj.unpersist()
-            raise RuntimeError(
-                f"shortest_hops frontier still live after {max_iter} "
-                "rounds (graph diameter exceeds it) — nodes beyond the "
-                "horizon would be missing. Re-run with a larger max_iter."
+        found = nxt.count()
+        if found:
+            visited = visited.unionByName(nxt).localCheckpoint(eager=False)
+            frontier = nxt
+        return (frontier, visited, depth + 1), found
+
+    with released(adj):
+        frontier = (
+            edges.sparkSession.range(1)
+            .select(
+                F.lit(source).cast(node_type).alias("node"),
+                F.lit(0).alias("dist"),
             )
-    adj.unpersist()
-    return visited
+            .localCheckpoint()
+        )
+        what = "shortest_hops frontier still live"
+        return converge(step, (frontier, frontier, 1), max_iter, what)[1]
 
 
 def weighted_sssp(
@@ -580,51 +575,51 @@ def weighted_sssp(
         .persist()
     )
     node_type = adj.schema["a"].dataType
-    best = (
-        edges.sparkSession.range(1)
-        .select(
-            F.lit(source).cast(node_type).alias("node"),
-            F.lit(0).cast("bigint").alias("dist"),
-        )
-        .localCheckpoint()
-    )
-    frontier = best
-    # ONE job per round (round 12, the shortest_hops treatment): the
-    # improved-frontier count doubles as the lazy checkpoint's
-    # materializing action and the loop-control probe, and the merged
-    # best frame is checkpointed lazily — its single in-job consumer
-    # next round (the relaxation left join; the anti-join's second
-    # reference reads the blocks that join already saved) or the
-    # caller's action materializes it. The old shape ran 3 jobs per
-    # round (frontier probe, improved checkpoint, best checkpoint).
-    for _hop in range(1, max_hops + 1):
-        cand = (
-            frontier.join(adj, frontier["node"] == adj["a"])
-            .select(
-                F.col("b").alias("node"),
-                (F.col("dist") + F.col("w")).cast("bigint").alias("nd"),
-            )
-            .groupBy("node")
-            .agg(F.min("nd").alias("nd"))
-        )
-        improved = (
-            cand.join(
-                best.withColumnRenamed("dist", "old"), on="node", how="left"
-            )
-            .filter(F.col("old").isNull() | (F.col("nd") < F.col("old")))
-            .select("node", F.col("nd").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        if improved.count() == 0:
-            break
+    with released(adj):
         best = (
-            best.join(improved.select("node"), on="node", how="left_anti")
-            .unionByName(improved)
-            .localCheckpoint(eager=False)
+            edges.sparkSession.range(1)
+            .select(
+                F.lit(source).cast(node_type).alias("node"),
+                F.lit(0).cast("bigint").alias("dist"),
+            )
+            .localCheckpoint()
         )
-        frontier = improved
-    adj.unpersist()
-    return best
+        frontier = best
+        # ONE job per round (round 12, the shortest_hops treatment): the
+        # improved-frontier count doubles as the lazy checkpoint's
+        # materializing action and the loop-control probe, and the merged
+        # best frame is checkpointed lazily — its single in-job consumer
+        # next round (the relaxation left join; the anti-join's second
+        # reference reads the blocks that join already saved) or the
+        # caller's action materializes it. The old shape ran 3 jobs per
+        # round (frontier probe, improved checkpoint, best checkpoint).
+        for _ in range(max_hops):
+            cand = (
+                frontier.join(adj, frontier["node"] == adj["a"])
+                .select(
+                    F.col("b").alias("node"),
+                    (F.col("dist") + F.col("w")).cast("bigint").alias("nd"),
+                )
+                .groupBy("node")
+                .agg(F.min("nd").alias("nd"))
+            )
+            improved = (
+                cand.join(
+                    best.withColumnRenamed("dist", "old"), on="node", how="left"
+                )
+                .filter(F.col("old").isNull() | (F.col("nd") < F.col("old")))
+                .select("node", F.col("nd").alias("dist"))
+                .localCheckpoint(eager=False)
+            )
+            if improved.count() == 0:
+                break
+            best = (
+                best.join(improved.select("node"), on="node", how="left_anti")
+                .unionByName(improved)
+                .localCheckpoint(eager=False)
+            )
+            frontier = improved
+        return best
 
 
 def kcore(
@@ -653,7 +648,9 @@ def kcore(
     within ``max_iter`` rounds (deep peeling chains, e.g. a long path
     graph, remove only their endpoints per round): returning the
     intermediate superset would be a silently wrong answer — raise
-    with the resize instruction instead (round-4 self-review)."""
+    with the resize instruction instead (round-4 self-review). A core
+    that became final in round ``max_iter`` is returned: the kernel's
+    probe round (operators/loops.py::converge) peels nothing more."""
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # LAZY checkpoints + count-as-materializer (round 12): each round's
     # surviving-node count doubles as the keep frame's materializing
@@ -667,27 +664,24 @@ def kcore(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    n_prev = live.select("a").distinct().count()
-    converged = False
-    for _ in range(max_iter):
+
+    def step(state):
+        live, n_prev = state
         deg = live.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
         keep = deg.filter(F.col("d") >= k).select("a").localCheckpoint(eager=False)
         n_now = keep.count()
         if n_now == n_prev:
-            converged = True
-            break
+            return state, 0
         live = (
             live.join(keep, on="a", how="left_semi")
             .join(keep.select(F.col("a").alias("b")), on="b", how="left_semi")
             .localCheckpoint(eager=False)
         )
-        n_prev = n_now
-    if not converged:
-        raise RuntimeError(
-            f"kcore(k={k}) did not reach its fixpoint within {max_iter} "
-            "rounds — the surviving subgraph still had sub-k nodes. "
-            "Re-run with a larger max_iter (peeling depth exceeds it)."
-        )
+        return (live, n_now), n_prev - n_now
+
+    n_prev = live.select("a").distinct().count()
+    what = f"kcore(k={k}) has not reached its fixpoint"
+    live = converge(step, (live, n_prev), max_iter, what)[0]
     return live.select("a").distinct().withColumnRenamed("a", "node")
 
 
@@ -750,19 +744,6 @@ def hits(
         .dropDuplicates(["src", "dst"])
         .persist()
     )
-    # One-pass node universe (explode over the cached src-adjacency,
-    # not a third pass over the raw edges), then checkpoint: the frame
-    # seeds BOTH score columns and anchors every left join, and a
-    # fresh-id leaf avoids the analyzer relation-dedup cache miss
-    # described in ``pagerank``.
-    nodes = (
-        adj_s.select(F.explode(F.array("src", "dst")).alias("node"))
-        .distinct()
-        .repartition(n_part, "node")
-        .localCheckpoint()
-    )
-
-    n = float(nodes.count())
 
     def _grid(col):
         return F.round(col * fixed_point_scale) / fixed_point_scale
@@ -805,28 +786,41 @@ def hits(
             _grid(F.col("v") / F.col("s") * F.lit(n)).alias(out_col),
         )
 
-    hubs = nodes.withColumn("hub", F.lit(1.0))
-    auths = None
-    for _ in range(n_iter):
-        auths = _half_round(hubs, "hub", adj_s, "src", "dst", "auth")
-        hubs = _half_round(auths, "auth", adj_d, "dst", "src", "hub")
-    # Re-attach the universe once: nodes without out-edges keep hub 0,
-    # without in-edges auth 0 — exactly the rows the dense form carried
-    # as computed zeros through every round. Both left joins hash-build
-    # the score frames (round 11, the round-join treatment): an SMJ
-    # here sorts three O(|V|) frames for a once-off attach.
-    out = (
-        nodes.join(hubs.hint("shuffle_hash"), "node", "left")
-        .join(auths.hint("shuffle_hash"), "node", "left")
-        .select(
-            "node",
-            F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-            F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
+    with released(adj_s, adj_d):
+        # One-pass node universe (explode over the cached src-adjacency,
+        # not a third pass over the raw edges), then checkpoint: the
+        # frame seeds BOTH score columns and anchors every left join,
+        # and a fresh-id leaf avoids the analyzer relation-dedup cache
+        # miss described in ``pagerank``.
+        nodes = (
+            adj_s.select(F.explode(F.array("src", "dst")).alias("node"))
+            .distinct()
+            .repartition(n_part, "node")
+            .localCheckpoint()
         )
-    )
-    adj_s.unpersist()
-    adj_d.unpersist()
-    return out
+
+        n = float(nodes.count())
+
+        hubs = nodes.withColumn("hub", F.lit(1.0))
+        auths = None
+        for _ in range(n_iter):
+            auths = _half_round(hubs, "hub", adj_s, "src", "dst", "auth")
+            hubs = _half_round(auths, "auth", adj_d, "dst", "src", "hub")
+        # Re-attach the universe once: nodes without out-edges keep hub
+        # 0, without in-edges auth 0 — exactly the rows the dense form
+        # carried as computed zeros through every round. Both left joins
+        # hash-build the score frames (round 11, the round-join
+        # treatment): an SMJ here sorts three O(|V|) frames for a
+        # once-off attach.
+        return (
+            nodes.join(hubs.hint("shuffle_hash"), "node", "left")
+            .join(auths.hint("shuffle_hash"), "node", "left")
+            .select(
+                "node",
+                F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
+                F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
+            )
+        )
 
 
 def label_propagation(
@@ -890,40 +884,38 @@ def label_propagation(
         .dropDuplicates(["a", "b"])
         .persist()
     )
-    # Round 1 in closed form: labels start as identity, und is
-    # distinct, so every vote count is exactly 1 and the
-    # (count DESC, label ASC) argmax degenerates to MIN(neighbor) —
-    # algebraically identical to the generic round (the SQL oracle
-    # runs the generic form; the hash-match proves the identity), one
-    # aggregation instead of join + two aggregations.
-    labels = (
-        und.groupBy(F.col("b").alias("node"))
-        .agg(F.min("a").alias("lbl"))
-        .localCheckpoint()
-    )
-    for _ in range(n_iter - 1):
-        # No join-strategy hint here (round 11 NEGATIVE RESULT): a
-        # shuffle_hash hint on the labels side — the pagerank/HITS
-        # round treatment — measured 8.8 → 13.7 s at sf0.1. AQE was
-        # already broadcasting the borderline-10MB labels frame
-        # (zero exchange either side); the hint forced the exchange
-        # back in. AQE's runtime size check IS the scale-adaptive
-        # choice: broadcast while labels fit, sort-merge/hash beyond.
-        votes = (
-            und.join(labels, und["a"] == labels["node"])
-            .groupBy(und["b"].alias("node"), "lbl")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
+    with released(und):
+        # Round 1 in closed form: labels start as identity, und is
+        # distinct, so every vote count is exactly 1 and the
+        # (count DESC, label ASC) argmax degenerates to MIN(neighbor) —
+        # algebraically identical to the generic round (the SQL oracle
+        # runs the generic form; the hash-match proves the identity), one
+        # aggregation instead of join + two aggregations.
         labels = (
-            votes.groupBy("node")
-            .agg(
-                F.max_by(
-                    "lbl", F.struct(F.col("cnt"), (-F.col("lbl")).alias("nl"))
-                ).alias("lbl")
-            )
+            und.groupBy(F.col("b").alias("node"))
+            .agg(F.min("a").alias("lbl"))
             .localCheckpoint()
         )
-    # Every consumer of und is materialized (labels is checkpointed
-    # each round), so the cache can be dropped before returning.
-    und.unpersist()
-    return labels
+        for _ in range(n_iter - 1):
+            # No join-strategy hint here (round 11 NEGATIVE RESULT): a
+            # shuffle_hash hint on the labels side — the pagerank/HITS
+            # round treatment — measured 8.8 → 13.7 s at sf0.1. AQE was
+            # already broadcasting the borderline-10MB labels frame
+            # (zero exchange either side); the hint forced the exchange
+            # back in. AQE's runtime size check IS the scale-adaptive
+            # choice: broadcast while labels fit, sort-merge/hash beyond.
+            votes = (
+                und.join(labels, und["a"] == labels["node"])
+                .groupBy(und["b"].alias("node"), "lbl")
+                .agg(F.count(F.lit(1)).alias("cnt"))
+            )
+            labels = (
+                votes.groupBy("node")
+                .agg(
+                    F.max_by(
+                        "lbl", F.struct(F.col("cnt"), (-F.col("lbl")).alias("nl"))
+                    ).alias("lbl")
+                )
+                .localCheckpoint()
+            )
+        return labels

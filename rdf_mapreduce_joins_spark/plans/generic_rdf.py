@@ -42,7 +42,7 @@ from rdf_mapreduce_joins_spark.plans.sparql import (
     _rewrite_notbound,
     parse_sparql,
 )
-from rdf_mapreduce_joins_spark.sources.tables import read_parquet
+from rdf_mapreduce_joins_spark.sources.tables import file_identity, read_parquet
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -757,23 +757,26 @@ _STORE_ROOT = "/root/repo/.scratch/triples_store"
 
 
 def _store_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-on-miss cached store for the fixtures' triples view,
-    keyed by sf dir and invalidated when the source parquet is newer
-    (driver fixture re-provisions must not serve a stale store)."""
+    """Build-on-miss cached store for the fixtures' triples view, keyed
+    by sf dir. The ``_BUILT`` marker records the identity of the source
+    parquet it was built from (sources/tables.py::file_identity), and a
+    different identity rebuilds it: a re-provisioned fixture set, or a
+    copy that keeps older mtimes, must not serve a stale store."""
     import os
+    from pathlib import Path
 
     name = os.path.basename(sf_dir.rstrip("/"))
     path = os.path.join(_STORE_ROOT, name)
     marker = os.path.join(path, "_BUILT")
-    src_mtime = max(
-        os.path.getmtime(os.path.join(sf_dir, f))
+    ident = repr(sorted(
+        (f, file_identity(os.path.join(sf_dir, f)))
         for f in os.listdir(sf_dir)
         if f.endswith(".parquet")
-    )
-    if not os.path.exists(marker) or os.path.getmtime(marker) < src_mtime:
+    ))
+    built = Path(marker).read_text() if os.path.exists(marker) else None
+    if built != ident:
         build_triples_store(triples(spark, sf_dir), path)
-        with open(marker, "w") as fh:
-            fh.write("ok\n")
+        Path(marker).write_text(ident)
     return path
 
 
@@ -791,7 +794,8 @@ def rdf_generic_indexed_sparql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted-store generic executor under the oracle gate:
     same SPARQL text as rdf_generic_triples_sparql, but ids come
     pre-encoded from the partitioned store and the decode dictionary
-    loads from disk (built once per fixture set, cached on mtime).
+    loads from disk (built once per fixture set, rebuilt when the
+    source files' identity changes).
     This is the deployment shape where the encoded design wins: the
     per-query dictionary build — the measured cost that made inline
     encoding lose locally — is amortized to zero."""

@@ -28,9 +28,11 @@ the memo keeps the ``StructType`` Spark inferred and hands it back via
 ``spark.read.schema(...)``, so only the first read of a file runs that
 job. The key is the absolute path plus the confs that change what is
 inferred (:data:`_INFERENCE_CONFS`); the stored value is the file
-identity and the schema. Identity is ``(st_mtime_ns, st_size)`` of a
-file, or the sorted ``(path, mtime_ns, size)`` of every file under a
-directory (a hive-partitioned store). A re-provisioned fixture or a
+identity and the schema. Identity (:func:`file_identity`, also the
+triples store's rebuild key in plans/generic_rdf.py) is
+``(st_mtime_ns, st_size)`` of a file, or the sorted
+``(path, mtime_ns, size)`` of every file under a directory (a
+hive-partitioned store). A re-provisioned fixture or a
 rebuilt store has a new identity, is re-inferred and replaces its entry,
 so the memo holds one entry per key. A path ``os.stat`` cannot see (a
 non-local URI, a missing file) goes through plain ``spark.read.parquet``,
@@ -108,7 +110,7 @@ _INFERENCE_CONFS = (
 _SCHEMAS: dict[tuple, tuple[object, StructType]] = {}
 
 
-def _file_identity(path: str):
+def file_identity(path: str):
     """``(mtime_ns, size)`` of a file, or the sorted per-file triples of
     everything under a directory; None when ``os.stat`` cannot see it."""
     try:
@@ -132,7 +134,7 @@ def _file_identity(path: str):
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` without the schema-inference job once
     the file's schema is known (see the module docstring)."""
-    ident = _file_identity(path)
+    ident = file_identity(path)
     if ident is None:
         return spark.read.parquet(path)
     key = (os.path.abspath(path), tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))

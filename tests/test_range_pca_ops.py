@@ -391,3 +391,82 @@ def test_shortest_hops_and_components_fail_loud_on_exhaustion(spark):
         connected_components(pairs, max_iter=2)
     comp = connected_components(pairs, max_iter=12).collect()
     assert {r.component for r in comp} == {"n0"}
+
+
+# A 9-node chain n0 -> ... -> n8: diameter 8, 36 reachable pairs.
+CHAIN9 = [(f"n{i}", f"n{i+1}") for i in range(8)]
+
+
+def test_components_final_at_max_iter_is_returned(spark):
+    """n8 takes the label n0 in round 8 and round 9 changes nothing:
+    max_iter=8 is exactly enough and must not raise."""
+    from rdf_mapreduce_joins_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(CHAIN9, "d1 string, d2 string")
+    comp = connected_components(pairs, max_iter=8).collect()
+    assert {r.component for r in comp} == {"n0"}
+
+
+def test_kcore_final_at_max_iter_is_returned(spark):
+    """The 12-edge path peels to nothing within 7 rounds; the probe
+    round peels nothing more, so the empty 2-core is returned."""
+    from rdf_mapreduce_joins_spark.operators.graph import kcore
+
+    path = [(f"n{i}", f"n{i+1}") for i in range(12)]
+    edges = spark.createDataFrame(path, "src string, dst string")
+    assert kcore(edges, 2, max_iter=7).count() == 0
+
+
+def test_transitive_closure_fails_loud_on_exhaustion(spark):
+    """Doubling reaches paths of length 2, 4, 8 in rounds 1-3: two
+    rounds leave the closure growing (raise, never the 26-pair
+    truncation), three are exactly enough."""
+    from rdf_mapreduce_joins_spark.operators.graph import transitive_closure
+
+    edges = spark.createDataFrame(CHAIN9, "src string, dst string")
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        transitive_closure(edges, max_iter=2)
+    assert transitive_closure(edges, max_iter=3).count() == 36
+
+
+def _persisting_loops():
+    from rdf_mapreduce_joins_spark.operators import graph
+    from rdf_mapreduce_joins_spark.operators.dedup import connected_components
+
+    return {
+        "pagerank": graph.pagerank,
+        "hits": graph.hits,
+        "label_propagation": graph.label_propagation,
+        "shortest_hops": lambda e: graph.shortest_hops(e, 0),
+        "weighted_sssp": lambda e: graph.weighted_sssp(
+            e.withColumn("w", F.lit(1)), 0
+        ),
+        "connected_components": lambda e: connected_components(e, "src", "dst"),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_persisting_loops()))
+def test_loop_releases_its_cache_when_a_round_raises(spark, monkeypatch, name):
+    """Every frame a loop persisted leaves Spark's cache manager even
+    when a round raises (here: the 3rd localCheckpoint call)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    op = _persisting_loops()[name]
+    # integer ids: label_propagation orders (negates) its labels
+    chain = [(i, i + 1) for i in range(8)]
+    edges = spark.createDataFrame(chain, "src long, dst long")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    real = DataFrame.localCheckpoint
+    calls = []
+
+    def third_call_raises(self, *args, **kwargs):
+        calls.append(None)
+        if len(calls) == 3:
+            raise RuntimeError("injected round failure")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", third_call_raises)
+    with pytest.raises(RuntimeError, match="injected round failure"):
+        op(edges)
+    assert cache.isEmpty()

@@ -160,8 +160,34 @@ def test_rebuilt_store_is_reinferred(spark, sf_dir, tmp_path, monkeypatch):
     os.utime(src / "customer.parquet", (future, future))
     assert run() == want
     after = _memo_identity(spark, tri)
-    assert after != before and after == tables._file_identity(tri)
+    assert after != before and after == tables.file_identity(tri)
     assert _entries(tri) == 1
+
+
+def test_store_rebuilt_when_a_copied_source_changes(spark, sf_dir, tmp_path, monkeypatch):
+    """A fixture copy keeps its sources' older mtimes (copytree), so a
+    changed source can stay older than the store's marker: the store is
+    rebuilt from the new data all the same."""
+    name = "rdf_generic_indexed_sparql"
+    src = tmp_path / "sf"
+    shutil.copytree(sf_dir, src)
+    monkeypatch.setattr(G, "_STORE_ROOT", str(tmp_path / "root"))
+    marker = os.path.join(G._store_path(spark, str(src)), "_BUILT")
+    with open(marker) as fh:
+        built = fh.read()
+    cust = src / "customer.parquet"
+    newer = os.path.getmtime(cust) + 10
+    assert newer < os.path.getmtime(marker)
+    # Half the customers go: a stale store would still return them.
+    full = pq.read_table(cust)
+    pq.write_table(full.slice(0, full.num_rows // 2), cust)
+    os.utime(cust, (newer, newer))
+    cols, want = _oracle_rows(str(src), name)
+    df = entrymod.queries()[name](spark, str(src))
+    got = sorted(tuple(r[c] for c in cols) for r in df.collect())
+    assert got == sorted(want)
+    with open(marker) as fh:
+        assert fh.read() != built
 
 
 RDF_JOINS = (

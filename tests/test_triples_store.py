@@ -1,10 +1,11 @@
 """Persisted triples store (plans/generic_rdf.py): the ingest-time
 encode+dictionary layout — equivalence with the inline paths, partition
-pruning at the scan, and mtime-based staleness rebuild."""
+pruning at the scan, and the rebuild when the sources' identity changes."""
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -78,15 +79,22 @@ def test_store_dictionary_has_no_collisions(spark, sf_dir, tmp_path):
 
 def test_cached_store_rebuilds_when_source_newer(spark, sf_dir, monkeypatch, tmp_path):
     monkeypatch.setattr(G, "_STORE_ROOT", str(tmp_path / "root"))
-    p1 = G._store_path(spark, sf_dir)
+    src = tmp_path / "sf0.001"
+    shutil.copytree(sf_dir, src)
+    p1 = G._store_path(spark, str(src))
     marker = os.path.join(p1, "_BUILT")
     t1 = os.path.getmtime(marker)
     # second call: cache hit, no rebuild
-    G._store_path(spark, sf_dir)
+    G._store_path(spark, str(src))
     assert os.path.getmtime(marker) == t1
-    # make the marker look older than the source → rebuild
+    # the marker's own age is not the rule: unchanged sources still hit
     os.utime(marker, (1, 1))
-    G._store_path(spark, sf_dir)
+    G._store_path(spark, str(src))
+    assert os.path.getmtime(marker) == 1
+    # a newer source changes the sources' identity → rebuild
+    newer = os.path.getmtime(src / "customer.parquet") + 10
+    os.utime(src / "customer.parquet", (newer, newer))
+    G._store_path(spark, str(src))
     assert os.path.getmtime(marker) > 1
 
 
