@@ -94,6 +94,9 @@ def minhash_signatures(
     One explode + one grouped aggregation with ``num_perm`` min()
     columns — partial aggregation (map-side combine) applies, so the
     shuffle carries one row per (doc × partition), not per shingle.
+    Each min() column, and the ``sig`` array over them, is one SQL
+    expression string, so the build makes a few py4j calls per column
+    instead of several per operator and constant.
 
     ``hash_family`` picks the base shingle hash (operators/hashing.py):
     xxhash64 (default, cheapest at 100 TB) or md5-60bit (cross-engine —
@@ -110,12 +113,12 @@ def minhash_signatures(
         F.col(id_col), F.explode(shingles(text_col, shingle_k)).alias("shingle")
     ).withColumn("h0", F.pmod(hashing.base_hash60("shingle", hash_family), F.lit(P31)))
     aggs = [
-        F.min(F.pmod(F.lit(a) * F.col("h0") + F.lit(b), F.lit(P31))).alias(f"m{i}")
+        F.expr(f"min(pmod({a} * h0 + {b}, {P31})) AS m{i}")
         for i, (a, b) in enumerate(_perm_constants(num_perm))
     ]
     per_doc = sh.groupBy(id_col).agg(*aggs)
-    sig = F.array(*[F.col(f"m{i}") for i in range(num_perm)])
-    return per_doc.select(F.col(id_col), sig.alias("sig"))
+    sig = ", ".join(f"m{i}" for i in range(num_perm))
+    return per_doc.select(F.col(id_col), F.expr(f"array({sig}) AS sig"))
 
 
 def _cap_buckets(
@@ -158,20 +161,21 @@ def band_index_entries(
     incremental-clustering sink persists exactly these rows, so
     stream and batch band keys are identical by construction."""
 
-    def bucket_key(b: int) -> F.Column:
+    def bucket_key(b: int) -> str:
         vals = [
-            F.element_at("sig", b * rows_per_band + r + 1)
+            f"element_at(sig, {b * rows_per_band + r + 1})"
             for r in range(rows_per_band)
         ]
         if hash_family == "md5":
-            return F.concat_ws(":", *[v.cast("string") for v in vals])
-        return F.xxhash64(F.lit(b), *vals)
+            strs = ", ".join(f"CAST({v} AS STRING)" for v in vals)
+            return f"concat_ws(':', {strs})"
+        return f"xxhash64({b}, {', '.join(vals)})"
 
-    entries = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), bucket_key(b).alias("bh"))
-            for b in range(bands)
-        ]
+    # All bands' keys are one SQL expression (a few py4j calls).
+    entries = F.expr(
+        "array("
+        + ", ".join(f"struct({b} AS band, {bucket_key(b)} AS bh)" for b in range(bands))
+        + ")"
     )
     return signatures.select(
         F.col(id_col), F.explode(entries).alias("e"), *extra_cols
@@ -298,35 +302,38 @@ def simhash_signatures(
         # half, identical bits to per-nibble decoding.
         toks = toks.withColumn("_hx", F.md5("tok"))
         halves = [
-            F.conv(F.substring("_hx", 1 + 8 * h, 8), 16, 10).cast("long")
+            f"CAST(conv(substring(_hx, {1 + 8 * h}, 8), 16, 10) AS BIGINT)"
             for h in range(2)
         ]
 
-        def bit(j: int) -> F.Column:
+        def bit(j: int) -> str:
             np_ = j // 4
             half, np_in = halves[np_ // 8], np_ % 8
-            return F.shiftright(half, 4 * (7 - np_in) + j % 4).bitwiseAND(
-                F.lit(1)
-            )
+            return f"shiftright({half}, {4 * (7 - np_in) + j % 4}) & 1"
 
     else:
-        h = F.xxhash64("tok")
 
-        def bit(j: int) -> F.Column:
-            return F.shiftright(h, j).bitwiseAND(F.lit(1))
+        def bit(j: int) -> str:
+            return f"shiftright(xxhash64(tok), {j}) & 1"
 
+    # One SQL expression string per bit sum, and one for the whole
+    # band array: a few py4j calls apiece.
     aggs = [
-        F.sum(bit(j) * 2 - 1).alias(f"s{j}") for j in range(_SIMHASH_BITS)
+        F.expr(f"sum(({bit(j)}) * 2 - 1) AS s{j}") for j in range(_SIMHASH_BITS)
     ]
     sums = toks.groupBy(id_col).agg(*aggs)
-    band_cols = []
-    for b in range(_N_BANDS):
-        val = F.lit(0)
-        for j in range(_BAND_BITS):
-            bit_idx = b * _BAND_BITS + j
-            val = val + F.when(F.col(f"s{bit_idx}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        band_cols.append(val.cast("int"))
-    return sums.select(F.col(id_col), F.array(*band_cols).alias("bands"))
+    band_cols = [
+        "CAST(0"
+        + "".join(
+            f" + CASE WHEN s{b * _BAND_BITS + j} > 0 THEN {1 << j} ELSE 0 END"
+            for j in range(_BAND_BITS)
+        )
+        + " AS INT)"
+        for b in range(_N_BANDS)
+    ]
+    return sums.select(
+        F.col(id_col), F.expr(f"array({', '.join(band_cols)}) AS bands")
+    )
 
 
 def simhash_pairs(

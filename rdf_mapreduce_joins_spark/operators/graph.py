@@ -849,8 +849,9 @@ def label_propagation(
     Scale shape: per round ONE shuffle join (labels⋈undirected edges
     on the voting endpoint) and ONE two-level aggregation — the
     (node, label) vote count is map-side combinable, and the argmax
-    per node is ``max_by`` over the (count, -label) struct (no window
-    sort over the vote stream). The undirected edge list is
+    per node is ``min_by`` over the (-count, label) struct (no window
+    sort over the vote stream; it negates the count, never the label,
+    so any orderable node id works). The undirected edge list is
     hash-partitioned on the voting endpoint "a" and PERSISTED — the
     pagerank adjacency-cache lesson (round 11): a localCheckpoint
     records UnknownPartitioning, so the O(|E|) edge list was being
@@ -912,8 +913,8 @@ def label_propagation(
             labels = (
                 votes.groupBy("node")
                 .agg(
-                    F.max_by(
-                        "lbl", F.struct(F.col("cnt"), (-F.col("lbl")).alias("nl"))
+                    F.min_by(
+                        "lbl", F.struct((-F.col("cnt")).alias("ncnt"), F.col("lbl"))
                     ).alias("lbl")
                 )
                 .localCheckpoint()

@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rdf_mapreduce_joins_spark.operators.literals import literal
+
 
 def _partials_fn(col: str, d: int):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -88,7 +90,7 @@ def principal_components(cov: np.ndarray, k: int) -> np.ndarray:
 
 
 def _dot_literal(col: Column, weights: np.ndarray) -> Column:
-    w = F.array(*[F.lit(float(x)) for x in weights])
+    w = literal([float(x) for x in weights])
     return F.aggregate(
         F.zip_with(col, w, lambda x, wi: x * wi),
         F.lit(0.0),

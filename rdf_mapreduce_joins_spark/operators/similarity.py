@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rdf_mapreduce_joins_spark.operators.literals import literal
+
 
 def as_double_array(col: Column | str) -> Column:
     """array<float> → array<double> (exact: every float32 is a double)."""
@@ -62,8 +64,9 @@ def cosine_prenormed(a: Column, b: Column, na: Column, nb: Column) -> Column:
 
 
 def lit_vector(values: list[float]) -> Column:
-    """A query vector as a literal array<double> column."""
-    return F.array(*[F.lit(float(v)) for v in values])
+    """A query vector as a literal array<double> column, built by one
+    ``F.expr`` (operators/literals.py)."""
+    return literal([float(v) for v in values])
 
 
 def brute_force_topk(
@@ -145,28 +148,28 @@ def lsh_topk(
     narrow column per table) and queries probe by equality — a
     broadcast-joinable lookup instead of a full scan. Deterministic:
     hyperplanes derive from (seed, table index) only.
+
+    Build cost does not grow with the constants: the hyperplane table
+    and the query vector each reach the JVM as one literal built by
+    one ``F.expr`` (operators/literals.py), a fixed few py4j calls
+    whatever ``n_tables`` x ``n_planes`` x dim is.
     """
     dim = len(query_vec)
     df = embeddings
     if exclude_id is not None:
         df = df.filter(F.col(id_col) != exclude_id)
     dbl = as_double_array(vec_col)
-    # The (table, plane) set rides ONE constant-folded literal — an
-    # array of {qb, planes:[{bit, vec}]} structs — and a transform
-    # lambda recomputes the same per-table sign-bit bucket sum per
-    # element (round 11, the _centroid_dist_entries treatment from the
-    # IVF family): the old form unrolled n_tables x n_planes dot-product
-    # blocks into a ~7k-node predicate the analyzer/codegen re-walked
-    # per query. The outer 1-element transform LET-BINDS the
-    # float->double cast so it evaluates once per row instead of once
-    # per dot (expressions referenced inside an HOF lambda re-evaluate
-    # per invocation — the wave-3 lambda lesson; a bound lambda var
-    # does not). Bucket arithmetic, bit order, and the dot fold are
-    # op-for-op identical, so candidate sets cannot move.
-    # Zero tables = zero buckets to match (ADVICE r11): short-circuit
-    # to an empty result instead of building an untyped empty array
-    # literal under F.exists (analysis error), matching the old
-    # per-table loop's F.lit(False) degradation.
+    # The (table, plane) set is ONE constant-folded literal, an array
+    # of {qb, planes:[{bit, vec}]} structs built by one F.expr, and
+    # a lambda computes each table's sign-bit bucket sum per row, so
+    # the expression stays the same size for any table and plane
+    # count. The outer 1-element transform LET-BINDS the float->double
+    # cast so it evaluates once per row instead of once per dot
+    # (expressions referenced inside an HOF lambda re-evaluate per
+    # invocation; a bound lambda var does not).
+    # Zero tables = zero buckets to match: return an empty result (an
+    # empty array literal under F.exists is untyped and fails
+    # analysis).
     if n_tables <= 0:
         return (
             df.filter(F.lit(False))
@@ -180,24 +183,13 @@ def lsh_topk(
         for j, h in enumerate(planes):
             if sum(q * hj for q, hj in zip(query_vec, h)) > 0:
                 qb += 1 << j
-        tables.append((qb, planes))
-    tables_lit = F.array(
-        *[
-            F.struct(
-                F.lit(qb).alias("qb"),
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(1 << j).alias("bit"),
-                            lit_vector(h).alias("vec"),
-                        )
-                        for j, h in enumerate(planes)
-                    ]
-                ).alias("planes"),
-            )
-            for qb, planes in tables
-        ]
-    )
+        tables.append(
+            {
+                "qb": qb,
+                "planes": [{"bit": 1 << j, "vec": h} for j, h in enumerate(planes)],
+            }
+        )
+    tables_lit = literal(tables)
     match = F.transform(
         F.array(dbl),
         lambda v: F.exists(
@@ -456,17 +448,16 @@ def knn_join_brute(
 
 def _centroid_dist_entries(vec: Column, centroids: list[list[float]]) -> Column:
     """array<struct<dist, cid>> of squared-L2 distances to every
-    centroid — built as ONE constant-folded array-of-structs literal
-    iterated by a transform lambda, not per-centroid unrolled
-    expressions (round 11): the unrolled form carried ~k x d x 5
-    expression nodes that the analyzer/optimizer re-walked on every
-    Lloyd round (fresh literals each round defeat any caching), which
-    dominated the whole IVF family at fixture scale. The lambda runs
-    the IDENTICAL per-row float op sequence (zip order, left-to-right
-    aggregate), so distances — and every tiebreak — are bit-equal."""
-    arr = F.array(
-        *[
-            F.struct(F.lit(cid).alias("cid"), lit_vector(c).alias("c"))
+    centroid. The k x d centroid matrix is ONE constant-folded
+    array-of-structs literal built by one ``F.expr``, iterated by a
+    transform lambda, so the expression has the same size for any k
+    and d, and each Lloyd round of ivf_train rebuilds it in one round
+    trip. Every row runs the same float op sequence (zip order,
+    left-to-right aggregate), so distances and every tiebreak are
+    deterministic."""
+    arr = literal(
+        [
+            {"cid": cid, "c": [float(x) for x in c]}
             for cid, c in enumerate(centroids)
         ]
     )

@@ -1720,7 +1720,7 @@ def lpa_round_select_sql(prev: str, eh: str = "eh") -> str:
     registered oracle below and tools/certify_staged.py's staged sf10
     certification (the pagerank_round_select_sql pattern): vote count
     per (node, label), argmax with the (COUNT DESC, label ASC) tie
-    order that mirrors the engine's max_by((cnt, -lbl))."""
+    order that mirrors the engine's min_by((-cnt, lbl))."""
     return f"""SELECT node_h, lbl FROM (
         SELECT e.hb AS node_h, p.lbl,
                ROW_NUMBER() OVER (
@@ -1738,7 +1738,7 @@ def _lpa_oracle_sql(n_iter: int = LPA_ITER) -> str:
     needed): md5-60bit node keys via the shared hex60 decode, per
     round a (node, label) vote count and a ROW_NUMBER argmax with the
     (COUNT DESC, label ASC) tie order that mirrors the engine's
-    max_by((cnt, -lbl)) exactly."""
+    min_by((-cnt, lbl)) exactly."""
     from rdf_mapreduce_joins_spark.operators.hashing import hex60_sql
 
     fk = sorted({s.pred for s in PRED_SPECS if s.obj_prefix is not None})

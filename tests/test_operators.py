@@ -752,46 +752,54 @@ class TestGraphAnalytics:
 
     def test_label_propagation_tiebreak_and_python_reference(self, spark):
         """Exact equality against a plain-Python synchronous LPA with
-        the same (count DESC, label ASC) tie-break, on a graph where
-        ties DO occur (a 4-cycle: every node sees two distinct
-        neighbor labels with count 1 each round) — pins the argmax
-        encoding max_by((cnt, -lbl)). Also pins determinism across
-        partitionings (1 vs 16)."""
+        the same (count DESC, label ASC) tie-break, on graphs where
+        ties DO occur (4-cycles: every node sees two distinct neighbor
+        labels with count 1 each round) — pins the argmax encoding
+        min_by((-cnt, lbl)). The string-keyed cycle pins that any
+        orderable id works (the label is compared, never negated).
+        Also pins determinism across partitionings (1 vs 16)."""
         from rdf_mapreduce_joins_spark.operators.graph import (
             label_propagation,
         )
 
-        edges = [(1, 2), (2, 3), (3, 4), (4, 1), (4, 5)]
+        inputs = [
+            ([(1, 2), (2, 3), (3, 4), (4, 1), (4, 5)], "src long, dst long"),
+            (
+                [("n1", "n2"), ("n2", "n3"), ("n3", "n4"), ("n4", "n1")],
+                "src string, dst string",
+            ),
+        ]
         rounds = 3
-        und = set()
-        for a, b in edges:
-            und.add((a, b))
-            und.add((b, a))
-        nodes = {a for a, _ in und}
-        lbl = {n: n for n in nodes}
-        for _ in range(rounds):
-            new = {}
-            for n in nodes:
-                votes = {}
-                for a, b in und:
-                    if b == n:
-                        votes[lbl[a]] = votes.get(lbl[a], 0) + 1
-                new[n] = min(
-                    votes, key=lambda v: (-votes[v], v)
-                )
-            lbl = new
-        e = spark.createDataFrame(edges, "src long, dst long")
-        got = {
-            r.node: r.lbl
-            for r in label_propagation(e, n_iter=rounds).collect()
-        }
-        assert got == lbl
-        e16 = e.repartition(16)
-        got16 = {
-            r.node: r.lbl
-            for r in label_propagation(e16, n_iter=rounds).collect()
-        }
-        assert got16 == lbl
+        for edges, ddl in inputs:
+            und = set()
+            for a, b in edges:
+                und.add((a, b))
+                und.add((b, a))
+            nodes = {a for a, _ in und}
+            lbl = {n: n for n in nodes}
+            for _ in range(rounds):
+                new = {}
+                for n in nodes:
+                    votes = {}
+                    for a, b in und:
+                        if b == n:
+                            votes[lbl[a]] = votes.get(lbl[a], 0) + 1
+                    new[n] = min(
+                        votes, key=lambda v: (-votes[v], v)
+                    )
+                lbl = new
+            e = spark.createDataFrame(edges, ddl)
+            got = {
+                r.node: r.lbl
+                for r in label_propagation(e, n_iter=rounds).collect()
+            }
+            assert got == lbl
+            e16 = e.repartition(16)
+            got16 = {
+                r.node: r.lbl
+                for r in label_propagation(e16, n_iter=rounds).collect()
+            }
+            assert got16 == lbl
 
     def test_triangle_count_known_graph(self, spark):
         """K4 has 4 triangles; adding a pendant edge changes nothing;

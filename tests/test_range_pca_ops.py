@@ -452,7 +452,7 @@ def test_loop_releases_its_cache_when_a_round_raises(spark, monkeypatch, name):
     from pyspark.sql.classic.dataframe import DataFrame
 
     op = _persisting_loops()[name]
-    # integer ids: label_propagation orders (negates) its labels
+    # integer ids: shortest_hops and weighted_sssp start from node 0
     chain = [(i, i + 1) for i in range(8)]
     edges = spark.createDataFrame(chain, "src long, dst long")
     cache = spark._jsparkSession.sharedState().cacheManager()

@@ -10,9 +10,10 @@ running anything.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rdf_mapreduce_joins_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
